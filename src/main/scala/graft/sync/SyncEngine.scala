@@ -13,26 +13,38 @@ import graft.store.VectorStoreWriter
 
 /** The sync/delta engine — the reference's core "query"
   * (`includes/class-indexer.php:284-479`, SURVEY §2.10) re-expressed as one
-  * dataflow over a SET of products, not a per-product loop:
+  * dataflow over a SET of products, not a per-product loop. One pass
+  * materializes its plan once:
   *
+  *   sync_state: read once, cached (all targets; this target's = existing)
   *   candidates → normalize → product_sha
-  *     → short-circuit: anti-join sync_state on (product_id, product_sha)
-  *       BEFORE chunk/embed — unchanged products never reach the embedder.
-  *       (The reference embeds first and compares after,
-  *       `class-indexer.php:229` vs `:329` — hoisting the sha comparison is
-  *       the §4 improvement with identical semantics.)
-  *     → chunk (UDF + explode) → chunk_sha → embed (mapPartitions, batched)
-  *     → payloads
-  *     → full-outer join with sync_state on (product_id, chunk_index)  [J4]
-  *     → route delete / upsert / skip
-  *     → vector-store merge + sync_state snapshot merge + summary      [A4]
+  *     → left join existing per product → is_changed         [cached split]
+  *       unchanged = same product_sha, no rebuild trigger, no error row,
+  *       not forced — decided BEFORE chunk/embed, so unchanged products
+  *       never reach the embedder. (The reference embeds first and
+  *       compares after, `class-indexer.php:229` vs `:329` — hoisting the
+  *       sha comparison is the §4 improvement with identical semantics.)
+  *     → changed: chunk (UDF + explode) → chunk_sha → embed
+  *       (mapPartitions, batched) → payloads                      [cached]
+  *     → full-outer join with existing on (product_id, chunk_index)  [J4]
+  *     → route delete / upsert / skip                             [cached]
+  *   one counts collect over the cached frames: chunks per action,
+  *     skip_unchanged, the batch's site span
+  *     → vector-store delete / upsert, each only when its count is > 0
+  *     → one merge join: existing left join per-product max(is_changed)
+  *       (absent kept, false touched, true replaced by fresh rows)
+  *       → sync_state commit
+  *     → event row, and the summary as a local relation           [A4]
   *
-  * Scale posture: the only wide exchanges are (a) the short-circuit
-  * anti-join and (b) the J4 full-outer join, both equi-joins on
-  * `product_id(,chunk_index)` — the natural co-partition key; both sides
-  * are projected to narrow (key, sha) columns before shuffling so chunk
-  * text and vectors never cross the wire. Embedding runs map-side after
-  * the pruning join, so cost is proportional to CHANGED data only.
+  * A no-op pass is three SQL executions: the counts collect, the
+  * sync_state write and the event append.
+  *
+  * Scale posture: the wide exchanges are the short-circuit join, the J4
+  * full-outer join and the merge join, all equi-joins on
+  * `product_id(,chunk_index)` — the natural co-partition key; each side is
+  * projected to narrow (key, sha) columns before shuffling so chunk text
+  * and vectors never cross the wire. Embedding runs map-side after the
+  * split, so cost is proportional to CHANGED data only.
   */
 final class SyncEngine(
     spark: SparkSession,
@@ -77,12 +89,17 @@ final class SyncEngine(
     val v = syncVersion
     if (v == 0) spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], syncSchema)
-    else spark.read.parquet(fsRoot.resolve(s"v$v").toString)
+    // the known schema, not inference: inference costs a footer-read job
+    // on every read
+    else spark.read.schema(syncSchema).parquet(fsRoot.resolve(s"v$v").toString)
   }
 
   private def commitSyncState(df: DataFrame): Unit = {
     val next = syncVersion + 1
-    df.write.mode(SaveMode.Overwrite).parquet(fsRoot.resolve(s"v$next").toString)
+    // written in syncSchema's types and order, so readSyncState's fixed
+    // schema always matches what is on disk
+    df.select(syncSchema.fields.toIndexedSeq.map(f => col(f.name).cast(f.dataType)): _*)
+      .write.mode(SaveMode.Overwrite).parquet(fsRoot.resolve(s"v$next").toString)
     java.nio.file.Files.createDirectories(fsRoot)
     // temp + atomic move: a partial write must never leave a corrupt cursor
     val tmp = fsRoot.resolve("_VERSION.tmp")
@@ -153,7 +170,6 @@ final class SyncEngine(
     * removed. */
   def deleteProduct(productId: Long, siteId: Int = 1): Long = {
     store.deleteByProduct(productId, siteId)
-    val all = readSyncState()
     // Scoped by site_id too: the store delete above filters by
     // (product_id, site_id), so the bookkeeping purge must match — a
     // site-mismatched call would otherwise erase ALL the product's
@@ -161,8 +177,17 @@ final class SyncEngine(
     // orphaned and the product treated as brand-new (round-11 review).
     val mine = col("product_id") === productId &&
       col("site_id") === siteId && col("target") === target
-    val removed = all.where(mine).count()
-    commitSyncState(all.where(!mine))
+    // one read of sync_state: the removed rows are counted and the rest
+    // written from the same cached snapshot. The removed rows are one
+    // product's chunks, so a narrow collect counts them in a single
+    // exchange-free job.
+    val all = readSyncState().cache()
+    val removed =
+      try {
+        val n = all.where(mine).select("chunk_index").collect().length.toLong
+        commitSyncState(all.where(!mine))
+        n
+      } finally all.unpersist()
     events.foreach { log =>
       import spark.implicits._
       log.append(Seq((clock, siteId, productId, target, "delete", "success", removed))
@@ -173,24 +198,25 @@ final class SyncEngine(
   }
 
   /** The delta plan shared by [[sync]] (which executes it) and
-    * [[sampleDryRun]] (which only reports it): short-circuit split,
-    * payload build, per-chunk full-outer routing, and the would-be
-    * delete-id / upsert sets. withSha/existing/payloads/routed are
-    * cached (the multiply-consumed frames) — call
-    * [[DeltaParts.unpersistAll]] when done. */
+    * [[sampleDryRun]] (which only reports it): the short-circuit split,
+    * payload build and per-chunk full-outer routing. `state` (sync_state,
+    * all targets; `existing` is this target's share), `joined` (candidates
+    * plus `is_changed`), `payloads` and `routed` are cached — every later
+    * action of the pass reads them — so call [[DeltaParts.unpersistAll]]
+    * when done. */
   private final case class DeltaParts(
-      withSha: DataFrame, existing: DataFrame, unchanged: DataFrame,
-      changed: DataFrame, payloads: DataFrame, routed: DataFrame,
-      deleteIds: DataFrame, upserts: DataFrame) {
+      state: DataFrame, existing: DataFrame, joined: DataFrame,
+      payloads: DataFrame, routed: DataFrame) {
+    def unchanged: DataFrame = joined.where(!col("is_changed"))
     def unpersistAll(): Unit = {
-      withSha.unpersist(); existing.unpersist()
+      state.unpersist(); joined.unpersist()
       payloads.unpersist(); routed.unpersist()
     }
   }
 
   private def deltaParts(normalized: DataFrame, force: Boolean): DeltaParts = {
-    val withSha = fingerprinted(normalized).cache()
-    val existing = readSyncState().where(col("target") === target).cache()
+    val state = readSyncState().cache()
+    val existing = state.where(col("target") === target)
 
     // Rebuild triggers: model/dimension mismatch → treat as changed
     // (`class-indexer.php:320-327`).
@@ -205,16 +231,15 @@ final class SyncEngine(
 
     // Short-circuit (`class-indexer.php:329-360`) hoisted BEFORE embedding:
     // unchanged = same product_sha and no rebuild trigger and not forced.
-    val joined = withSha.join(existingByProduct, Seq("product_id"), "left_outer")
-    val unchanged =
-      if (force) joined.where(lit(false))
-      else joined.where(col("old_sha") === col("product_sha") &&
-        col("rebuild") === 0 && col("has_error") === 0)
-    val changed =
-      if (force) joined
-      else joined.where(col("old_sha").isNull ||
-        col("old_sha") =!= col("product_sha") || col("rebuild") === 1 ||
-        col("has_error") === 1)
+    val isChanged =
+      if (force) lit(true)
+      else col("old_sha").isNull || col("old_sha") =!= col("product_sha") ||
+        col("rebuild") === 1 || col("has_error") === 1
+    val joined = fingerprinted(normalized)
+      .join(existingByProduct, Seq("product_id"), "left_outer")
+      .withColumn("is_changed", isChanged)
+      .cache()
+    val changed = joined.where(col("is_changed"))
 
     val payloads = buildPayloads(
       changed.select("product_id", "site_id", "sku", "text", "product_sha")).cache()
@@ -237,22 +262,26 @@ final class SyncEngine(
             col("e_status") === "error" || lit(force), "upsert")
           .otherwise("skip"))
       .cache()
+    DeltaParts(state, existing, joined, payloads, routed)
+  }
 
-    // Deletes resolve by stored vector_id, fallback recomputed id —
-    // `class-indexer.php:390-409`. The fallback id recomputes from the
-    // row's OWN site_id (carried through `exist` as e_site) — a hardcoded
-    // site-1 would silently delete a nonexistent id for any other site.
-    val deleteIds = routed.where(col("action") === "delete")
-      .select(coalesce(col("vector_id"),
-        format_string("site-%d:product-%d:chunk-%d",
-          col("e_site"), col("product_id"), col("chunk_index")))
-        .as("id"))
-    val upserts = payloads.join(
-      routed.where(col("action") === "upsert")
-        .select("product_id", "chunk_index"),
-      Seq("product_id", "chunk_index"), "left_semi")
-    DeltaParts(withSha, existing, unchanged, changed, payloads, routed,
-      deleteIds, upserts)
+  /** Every count one pass needs, in ONE collect over the cached frames:
+    * routed chunks per action, short-circuited products, and the batch's
+    * site for the event row — `Some(site)` only when every candidate
+    * carries that one non-NULL site (a multi-site, all-NULL or empty batch
+    * logs NULL). */
+  private def passCounts(parts: DeltaParts): (Map[String, Long], Option[Int]) = {
+    val actions = Seq("delete", "skip", "upsert")
+    val site = col("site_id").cast("int")
+    val perAction = actions.map(a => count(when(col("action") === a, 1)))
+    val r = parts.routed.agg(perAction.head, perAction.tail: _*)
+      .crossJoin(parts.joined.agg(count(when(!col("is_changed"), 1)),
+        min(site), max(site), count(when(site.isNull, 1))))
+      .head()
+    val counts = (actions :+ "skip_unchanged").zipWithIndex
+      .map { case (a, i) => a -> r.getLong(i) }.toMap
+    val single = !r.isNullAt(4) && r.getLong(6) == 0 && r.getInt(4) == r.getInt(5)
+    (counts, if (single) Some(r.getInt(4)) else None)
   }
 
   /** SAMPLE dry run — the reference's admin `sample_upsert`/`sample_delete`
@@ -301,27 +330,36 @@ final class SyncEngine(
     * Returns the per-action summary DataFrame (upserted/deleted/skipped). */
   def sync(normalized: DataFrame, force: Boolean = false): DataFrame = {
     val parts = deltaParts(normalized, force)
-    try syncImpl(parts, force) finally parts.unpersistAll()
+    try syncImpl(parts) finally parts.unpersistAll()
   }
 
-  private def syncImpl(parts: DeltaParts, force: Boolean): DataFrame = {
-    val unchanged = parts.unchanged
-    val changed = parts.changed
-    val payloads = parts.payloads
+  private def syncImpl(parts: DeltaParts): DataFrame = {
+    val (counts, siteForEvent) = passCounts(parts)
     val routed = parts.routed
-    val deleteIds = parts.deleteIds
-    val upserts = parts.upserts
     // Zero-remote-call short-circuit (golden case B): unchanged products
     // must produce NO store writes at all (`class-indexer.php:329-360`).
     // Write failure poisons only this run's rows (marked status=error and
     // re-picked next pass), not the job (`class-indexer.php:438-443`).
     val writeError: Option[Throwable] =
       try {
-        if (deleteIds.limit(1).count() > 0) store.deleteByIds(deleteIds)
-        if (upserts.limit(1).count() > 0)
-          store.upsert(upserts.select(
-            col("id"), col("values"), col("site_id"), col("product_id"),
-            col("sku"), col("url"), col("updated_at"), col("fingerprint"), col("fields")))
+        // Deletes resolve by stored vector_id, fallback recomputed id —
+        // `class-indexer.php:390-409`. The fallback id recomputes from the
+        // row's OWN site_id (carried through `exist` as e_site) — a
+        // hardcoded site-1 would silently delete a nonexistent id for any
+        // other site.
+        if (counts("delete") > 0)
+          store.deleteByIds(routed.where(col("action") === "delete")
+            .select(coalesce(col("vector_id"),
+              format_string("site-%d:product-%d:chunk-%d",
+                col("e_site"), col("product_id"), col("chunk_index")))
+              .as("id")))
+        if (counts("upsert") > 0)
+          store.upsert(parts.payloads
+            .join(routed.where(col("action") === "upsert")
+              .select("product_id", "chunk_index"),
+              Seq("product_id", "chunk_index"), "left_semi")
+            .select(col("id"), col("values"), col("site_id"), col("product_id"),
+              col("sku"), col("url"), col("updated_at"), col("fingerprint"), col("fields")))
         None
       } catch { case e: Throwable => Some(e) }
 
@@ -333,7 +371,7 @@ final class SyncEngine(
     val errMsg = writeError.map(e =>
         lit(Option(e.getMessage).getOrElse(e.getClass.getName).take(200)))
       .getOrElse(lit(null)).cast("string")
-    val freshRows = payloads.select(
+    val freshRows = parts.payloads.select(
       col("site_id"), col("product_id"), lit(target).as("target"),
       col("chunk_index"), col("id").as("vector_id"),
       col("product_sha"), col("chunk_sha"),
@@ -343,16 +381,18 @@ final class SyncEngine(
     // The merge rewrites only THIS target's rows — a second adapter's
     // bookkeeping (other `target` values, reference's per-target row model
     // `includes/class-plugin.php:126-127`) passes through untouched.
-    val all = readSyncState()
-    val others = all.where(col("target") =!= target)
-    val mine = all.where(col("target") === target)
-    val untouched = mine
-      .join(changed.select("product_id"), Seq("product_id"), "left_anti")
-    val touched = untouched
-      .join(unchanged.select("product_id"), Seq("product_id"), "left_semi")
-      .withColumn("last_synced_at", lit(clock))
-    val rest = untouched
-      .join(unchanged.select("product_id"), Seq("product_id"), "left_anti")
+    val others = parts.state.where(col("target") =!= target)
+    val mine = parts.existing
+    // One left join to the per-product flag: no flag = not a candidate
+    // (kept as is), false = unchanged (touched), true = changed (dropped;
+    // its fresh rows replace it). max: a product listed twice is changed
+    // if either listing is.
+    val flags = parts.joined.groupBy("product_id").agg(max("is_changed").as("changed"))
+    val kept = mine.join(flags, Seq("product_id"), "left_outer")
+      .where(!coalesce(col("changed"), lit(false)))
+      .withColumn("last_synced_at",
+        when(col("changed").isNull, col("last_synced_at")).otherwise(lit(clock)))
+      .drop("changed")
     // T8 delete-set preservation on write failure: rows routed 'delete'
     // belong to changed products, so the merge above drops them — correct
     // when the delete landed, but after a store failure they are the ONLY
@@ -371,40 +411,28 @@ final class SyncEngine(
         .withColumn("error_code", lit("graft_store_error"))
         .withColumn("error_msg", errMsg)
         .withColumn("last_synced_at", lit(clock))
-    commitSyncState(others.unionByName(rest).unionByName(touched)
-      .unionByName(freshRows.select(rest.columns.toIndexedSeq.map(col): _*))
-      .unionByName(failedDeletes.select(rest.columns.toIndexedSeq.map(col): _*)))
-
-    // A4 summary (`class-indexer.php:468-477`).
-    val acted = routed.groupBy("action").agg(count(lit(1)).as("n"))
-    val skippedUnchanged = unchanged.agg(
-      coalesce(sum(lit(1)), lit(0L)).as("n_products"))
-      .select(lit("skip_unchanged").as("action"), col("n_products").as("n"))
-    val out = acted.unionByName(skippedUnchanged).orderBy("action")
-    val materialized = out.collect()
+    commitSyncState(others.unionByName(kept).unionByName(freshRows)
+      .unionByName(failedDeletes))
 
     // K8: append one event row per sync pass (reference logs per action,
-    // `includes/class-events.php:18-47`; SURVEY §2.2 K8).
+    // `includes/class-events.php:18-47`; SURVEY §2.2 K8). The site comes
+    // from the batch itself (a hardcoded 1 mislabeled every
+    // non-default-site pass); NULL makes an equality filter on site_id
+    // exclude the row rather than mis-attribute it.
     events.foreach { log =>
-      val counts = materialized.map(r => r.getString(0) -> r.getLong(1)).toMap
       val outcome = if (writeError.isEmpty) "success" else "error"
-      // Site attribution from the batch itself (a hardcoded 1 mislabeled
-      // every non-default-site pass): single-site batch → that site;
-      // multi-site or empty batch → NULL (an equality filter on site_id
-      // then correctly excludes the row rather than mis-attributing it).
-      val sites = parts.withSha.select("site_id").distinct().limit(2).collect()
-      val siteForEvent: Option[Int] =
-        if (sites.length == 1) Some(sites(0).getInt(0)) else None
-      import spark.implicits._
       log.append(Seq((clock, siteForEvent, target, "sync", outcome,
-          counts.getOrElse("upsert", 0L), counts.getOrElse("delete", 0L),
-          counts.getOrElse("skip", 0L) + counts.getOrElse("skip_unchanged", 0L),
+          counts("upsert"), counts("delete"),
+          counts("skip") + counts("skip_unchanged"),
           writeError.map(e => Option(e.getMessage).getOrElse("").take(200)).orNull))
         .toDF("ts_s", "site_id", "target", "action", "outcome",
           "upserted", "deleted", "skipped", "error_msg")
         .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s"))
     }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(materialized.toSeq), out.schema)
+
+    // A4 summary (`class-indexer.php:468-477`): the routed actions that
+    // occurred plus skip_unchanged, as a local relation.
+    counts.toSeq.filter { case (a, n) => n > 0 || a == "skip_unchanged" }
+      .sortBy(_._1).toDF("action", "n")
   }
 }
